@@ -166,80 +166,6 @@ class DedupConfig:
     arrow_batch_rows: int = 2048  # small batches: `content` can be megabytes
     shuffle_partitions: int = 64
     checkpoint_dir: str = ""      # stage manifests + CC checkpoints; "" = temp
-    deep_coshuffle_pairs: int = 2_000_000
-                                  # deep-verify formulation switch floor
-                                  # (verify.choose_joined): residues below
-                                  # this many pairs ALWAYS use the content
-                                  # JOIN — at this size the pair list is
-                                  # broadcast-sized, AQE ships it past the
-                                  # content scan and joined measured
-                                  # 10-20% faster (round-4 A/B at
-                                  # 200k/500k files, 616k-pair residue).
-    deep_coshuffle_fanout: float = 12.0
-                                  # second switch condition, above the
-                                  # floor: mean pairs per participant
-                                  # (2*n_deep/participants). Joined moves
-                                  # content once per PAIR SIDE, co-shuffle
-                                  # once per PARTICIPANT-bucket, so
-                                  # co-shuffle pays off exactly when each
-                                  # participant's bytes would be duplicated
-                                  # many times. Round-5 A/B at the 1M-file
-                                  # corpus's 5.8M-pair residue (fanout
-                                  # 16.2, broadcast disabled) measured the
-                                  # CROSSOVER there — adjacent clean runs
-                                  # split 344/412/437s both ways. The knob
-                                  # sits just below that because a real
-                                  # cluster pays joined's duplicated bytes
-                                  # through the network shuffle, not this
-                                  # box's shared memory bus. Outputs
-                                  # identical (parity-tested).
-    deep_partition_factor: int = 4
-                                  # wave-1 deep-verify stage parallelism:
-                                  # the residue repartitions into
-                                  # factor * shuffle_partitions tasks
-                                  # instead of shuffle_partitions. The deep
-                                  # mapper is the pipeline's longest,
-                                  # highest-variance Python work (per-task
-                                  # cost rides the pair-count x content-
-                                  # length skew of whatever pids land
-                                  # there), so at shuffle_partitions tasks
-                                  # the stage drains with a straggler tail
-                                  # that idles slots: event-log measured at
-                                  # the 1M corpus / local[8], 16 tasks of
-                                  # 44-133 s (sum 1357 s) packed onto 8
-                                  # slots cost 212.5 s of stage wall vs the
-                                  # 170 s balanced optimum — a 20% tail
-                                  # that the 2-core level barely pays
-                                  # (16 tasks = 8 waves averages the
-                                  # variance out), i.e. a pure scaling-
-                                  # efficiency leak. Finer tasks pack
-                                  # tighter; per-task overhead (~tens of
-                                  # ms: scheduling + Arrow setup against
-                                  # reused Python workers) is noise next
-                                  # to multi-second deep tasks. Applied to
-                                  # wave 1 only — the bounded forced-joined
-                                  # calls (rep pairs, escalation) keep
-                                  # shuffle_partitions, where extra tasks
-                                  # are pure overhead. Output identical:
-                                  # execution-only, excluded from
-                                  # config_hash.
-    deep_pairs_per_task: int = 512
-                                  # floor on deep-verify pairs per task:
-                                  # the adaptive stage width is
-                                  # min(deep_partition_factor *
-                                  #     shuffle_partitions,
-                                  #     ceil(n_deep / this)) — small
-                                  # residues stop fanning out into
-                                  # hundreds of near-empty Python tasks
-                                  # (~200 ms Arrow/worker setup each,
-                                  # round-6 event log: 256 tasks, 54
-                                  # core-s for a 48-pair residue) while
-                                  # large residues still hit the factor
-                                  # cap unchanged. ~512 pairs ~ 0.5-2 s
-                                  # of deep work per task, well above the
-                                  # per-task overhead. Output identical:
-                                  # execution-only, excluded from
-                                  # config_hash.
     incremental_buckets: int = 0  # >0 (ckpt mode only): the signature stage
                                   # computes/commits per-bucket slices
                                   # (io.run_stage_buckets) so a killed run
@@ -269,9 +195,7 @@ class DedupConfig:
         d.pop("extra", None)
         # execution-only knobs do not change output semantics
         for k in ("arrow_batch_rows", "shuffle_partitions", "checkpoint_dir",
-                  "incremental_buckets", "deep_coshuffle_pairs",
-                  "deep_coshuffle_fanout", "deep_partition_factor",
-                  "deep_pairs_per_task"):
+                  "incremental_buckets"):
             d.pop(k, None)
         blob = json.dumps(d, sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]

@@ -384,12 +384,11 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             stage_caches.append(salted)
             if salted.where(F.col("nsplits") > 1).limit(1).count() == 0:
                 return None
-        # small bounded call: no meta-agg barrier, forced joined deep plan
+        # small bounded call: no meta-agg barrier
         # (rep pairs ~ rep_k^2 per salted sub-bucket pair)
         rep_verd = verify.verify_pairs(
             lsh.cross_rep_pairs(salted, cfg.rep_k), signatures, uniq, cfg,
-            handles=verify_internals, eager_meta=False,
-            formulation="joined").persist()
+            handles=verify_internals, eager_meta=False).persist()
         stage_caches.append(rep_verd)
         with barrier("p_rep_verify"):
             rep_verd.count()
@@ -432,10 +431,9 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             return v1
         esc_holder["df"] = esc
         # wave 2 is bounded by escalate_max_members — small: skip its
-        # meta barrier, force the joined deep plan
+        # meta barrier
         v2 = verify.verify_pairs(esc, signatures, uniq, cfg,
-                                 handles=verify_internals,
-                                 eager_meta=False, formulation="joined",
+                                 handles=verify_internals, eager_meta=False,
                                  deep_budget=cfg.escalate_deep_budget)
         return v1.unionByName(v2)
 
@@ -472,7 +470,6 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             return verify.verify_pairs(esc, signatures, uniq, cfg,
                                        handles=verify_internals,
                                        eager_meta=False,
-                                       formulation="joined",
                                        deep_budget=cfg.escalate_deep_budget)
         w2 = run_stage(spark, ckpt, ch, "verified_pairs_esc", _esc_stage,
                        lineage=False)

@@ -4,41 +4,22 @@ Frozen pass policy — see DedupConfig for the exact formula; tests/oracle.py
 implements the identical cascade, so cluster parity with the reference
 oracle is exact, not probabilistic.
 
-Cost shape (the part that matters at 10^12 files):
+Cost shape:
 - every candidate pair joins only fixed-width metadata: an 8-byte simhash,
-  a 256-byte minhash prefix (est_components) and a length — never the full
-  shingle sets;
-- content bytes move ONLY for the est-gated residue, through one of TWO
-  formulations chosen ADAPTIVELY from the measured residue size AND its
-  content-duplication fanout (round 5, `choose_joined`; the choice costs
-  nothing — both inputs fold into the metadata cache-fill agg):
+  two 8-byte b-bit minhash sketches and a length — never the full shingle
+  sets;
+- content bytes move ONLY for the est-gated residue: content is joined onto
+  the residue's pair rows and the joined rows feed one Arrow mapper. When
+  the pair list is broadcast-sized, AQE broadcasts it and `uniq` content
+  never shuffles; the only content movement is the repartition that
+  spreads the residue across cores. The deep stage's width adapts to the
+  residue count measured by the metadata cache-fill agg
+  (DEEP_PARTITION_FACTOR, DEEP_PAIRS_PER_TASK).
 
-  * JOINED (small residue): join content onto the pair rows and feed the
-    Arrow mapper directly. When the pair list is broadcast-sized, AQE
-    broadcasts it and `uniq` content never shuffles at all — the only
-    content movement is the single repartition of the joined rows. A/B
-    at 200k/500k files measured this 10-20% faster end-to-end than the
-    co-shuffle (which pays a blocking local sort for a byte saving that
-    is small while pairs-per-participant is ~2).
-  * CO-SHUFFLED (unbroadcastable residue AND hot participants): in the
-    unbroadcastable shape the joined plan shuffles full `uniq` content
-    for both join sides plus the per-pair attached bytes — the scale
-    killer when each participant's content rides many pairs. Round-5
-    A/B measured the crossover at fanout ~16 on this box
-    (`choose_joined`; BENCH/ADDENDUM.md Addendum 5). Here, bucket pairs
-    by pmod(xxhash64(a), 8P), tag the
-    distinct participants' content rows with the same bucket, union,
-    repartition ONCE on the bucket and locally sort so each bucket's
-    content precedes its pairs: content shuffles once per (participant,
-    bucket), never per pair, and the mapper normalizes + shingles each
-    participant once per bucket.
-
-- inside the mapper, exact Jaccard and the LCS check run as before: an
-  exact O(n) rolling-hash threshold decision first, the O(n log^2 n)
-  suffix array only for pairs that provably contain a qualifying common
-  substring. Both formulations evaluate pairs through ONE shared cascade
-  closure (`_make_cascade`), so the frozen policy cannot drift between
-  them.
+- inside the mapper, exact Jaccard runs first, then the LCS check: an
+  exact O(n) rolling-hash threshold decision, with the O(n log^2 n) suffix
+  array only for diagnostics or an unverifiable hash collision
+  (`_make_cascade`).
 """
 
 from __future__ import annotations
@@ -53,6 +34,13 @@ from pyspark.sql import functions as F
 from nise_dedup import instrument
 from nise_dedup.config import DedupConfig
 from nise_dedup.instrument import barrier
+
+# the deep mapper is the longest, most skew-varied Python work: finer tasks
+# than shuffle_partitions pack its straggler tail tighter onto the slots
+DEEP_PARTITION_FACTOR = 4
+# ~0.5-2 s of deep work per task, well above the ~200 ms Arrow/worker setup
+# each extra task pays, so small residues do not fan out into empty tasks
+DEEP_PAIRS_PER_TASK = 512
 
 
 def jaccard_expr(sh_a, sh_b):
@@ -100,13 +88,12 @@ def bbit_est_expr(lo_a, hi_a, lo_b, hi_b, m: int):
 
 def _make_cascade(cfg: DedupConfig):
     """The per-pair deep cascade (exact Jaccard → LCS decision), built once
-    per mapper on the worker and SHARED by both deep formulations so the
-    frozen policy cannot drift between them.
+    per deep mapper on the worker.
 
     ``ea``/``eb`` are mutable ``[norm_bytes, shingles|None]`` entries —
     shingle sets are computed lazily on first need and memoized back into
     the entry, so a participant pays the O(m) shingle pass at most once
-    per mapper-side table/memo lifetime.
+    per lifetime of its mapper memo entry.
 
     Returns run(ea, eb, est) -> (jaccard, lcs_len, ok) with jaccard=-1.0 /
     lcs_len=-1 where the cascade never computed them.
@@ -195,8 +182,7 @@ def _make_cascade(cfg: DedupConfig):
 
 
 def _deep_mapper_joined(cfg: DedupConfig):
-    """Deep verify over content-JOINED pair rows (the small-residue
-    formulation; see module docstring).
+    """Deep verify over content-joined pair rows (see module docstring).
 
     Input cols: a, b, est, content_a, content_b.
     Output: a, b, jaccard double (-1 if not computed), lcs_len long (-1),
@@ -242,122 +228,6 @@ def _deep_mapper_joined(cfg: DedupConfig):
                                 "lcs_len": lcs, "deep_pass": ok})
 
     return compute
-
-
-def _deep_mapper(cfg: DedupConfig):
-    """Deep verify over the CO-SHUFFLED residue stream (the large-residue
-    formulation; see module docstring).
-
-    Input: the tagged union stream, locally sorted by (pid, tag) —
-      tag=0 rows carry (pid, a=fid, content): a participant's content;
-      tag=1 rows carry (pid, a, b, est): a pair to evaluate.
-    All of a bucket's content rows precede its pair rows, so the mapper
-    builds one per-bucket table (normalized bytes + lazily computed shingle
-    set per fid, each computed EXACTLY ONCE per bucket) and evaluates every
-    pair from it. The table is dropped when the bucket id changes — sorted
-    input bounds resident memory to one bucket's participants; the bucket
-    count (8 * cfg.shuffle_partitions) is the scale knob.
-
-    Output: a, b, jaccard double (-1 if not computed), lcs_len long (-1),
-    deep_pass boolean — pair rows only.
-
-    IMPORTANT Arrow detail: every numeric input column is non-nullable by
-    construction (content rows reuse a=fid, b=0, est=0.0) — a nullable
-    int64 column would surface in pandas as float64 and corrupt xxhash64
-    ids above 2^53.
-    """
-    norm = cfg.normalize
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from nise_dedup import hashing as H
-
-        cascade = _make_cascade(cfg)
-        cur_pid = None
-        table: dict[int, list] = {}   # fid -> [norm_bytes, shingles|None]
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            pids = pdf["pid"].to_numpy()
-            tags = pdf["tag"].to_numpy()
-            ids_a = pdf["a"].to_numpy()
-            ids_b = pdf["b"].to_numpy()
-            ests = pdf["est"].to_numpy()
-            contents = pdf["content"]
-            out_a: list[int] = []
-            out_b: list[int] = []
-            out_j: list[float] = []
-            out_l: list[int] = []
-            out_ok: list[bool] = []
-            for i in range(n):
-                if pids[i] != cur_pid:
-                    cur_pid = pids[i]
-                    table.clear()
-                if tags[i] == 0:
-                    table[int(ids_a[i])] = [
-                        H.normalize_text(contents.iloc[i], norm)
-                        .encode("utf-8"), None]
-                    continue
-                a, b = int(ids_a[i]), int(ids_b[i])
-                ea, eb = table.get(a), table.get(b)
-                if ea is None or eb is None:
-                    raise RuntimeError(
-                        f"deep verify: content row missing for pair "
-                        f"({a}, {b}) in bucket {cur_pid}")
-                jac, lcs, ok = cascade(ea, eb, ests[i])
-                out_a.append(a)
-                out_b.append(b)
-                out_j.append(jac)
-                out_l.append(lcs)
-                out_ok.append(ok)
-            if out_a:
-                yield pd.DataFrame({
-                    "a": np.array(out_a, dtype=np.int64),
-                    "b": np.array(out_b, dtype=np.int64),
-                    "jaccard": np.array(out_j, dtype=np.float64),
-                    "lcs_len": np.array(out_l, dtype=np.int64),
-                    "deep_pass": np.array(out_ok, dtype=bool)})
-
-    return compute
-
-
-def choose_joined(n_deep: int, n_participants: int,
-                  cfg: DedupConfig) -> bool:
-    """Adaptive deep-verify formulation choice (VERDICT r4 next #3).
-
-    Returns True for the JOINED formulation (content joins the pair list),
-    False for the CO-SHUFFLED one (content moves once per participant-
-    bucket). Round-5 A/B measured the co-shuffle IN ITS OWN REGIME —
-    autoBroadcastJoinThreshold=-1 (nothing broadcastable, the plan shape
-    of an over-threshold residue on a real cluster), 1M-file corpus,
-    5.8M-pair est-gated residue with 719k distinct participants (mean
-    fanout 16.2), local[8]. Adjacent clean-window runs went both ways
-    (co-shuffle 344s -> joined 412s -> co-shuffle 437s; clean medians
-    391s vs 409s): at this fanout the formulations sit WITHIN
-    window-drift noise of each other — the measured crossover. Earlier
-    unpaired readings (joined 373-409s vs co-shuffle 568/475s) were
-    hypervisor drift: it moves every barrier uniformly 1.5x+ and swamps
-    a 20% plan effect (BENCH/ADDENDUM.md Addendum 5). The regime split:
-
-    - below the ``deep_coshuffle_pairs`` floor the pair list is
-      broadcast-sized and joined measured 10-20% faster (round-4 A/B,
-      616k-pair residue: AQE broadcasts it, content never shuffles);
-    - above the floor, switch on the content-duplication fanout
-      ``2*n_deep/participants``: joined attaches content once per pair
-      side, co-shuffle once per participant-bucket, so co-shuffle pays
-      off as fanout grows. ``deep_coshuffle_fanout`` sits just BELOW the
-      crossover this box measures (~16) because the box pays joined's
-      duplicated bytes through a shared memory bus, while a real cluster
-      pays them through the network shuffle — costlier relative to
-      co-shuffle's node-local sort, and more so at the 100-TB point.
-    """
-    if n_deep < cfg.deep_coshuffle_pairs:
-        return True
-    fanout = 2.0 * n_deep / max(1, n_participants)
-    return fanout < cfg.deep_coshuffle_fanout
 
 
 def _gate_exprs(cfg: DedupConfig):
@@ -420,7 +290,7 @@ def verify_pairs(cand: DataFrame, signatures: DataFrame,
                  uniq: DataFrame, cfg: DedupConfig,
                  handles: list | None = None,
                  eager_meta: bool = True,
-                 formulation: str = "auto",
+                 formulation: str = "joined",
                  deep_budget: int = 0) -> DataFrame:
     """V4 — cascade (see DedupConfig). Returns
     DF[a, b, est, jaccard, hamming, lcs_len, passed];
@@ -431,62 +301,60 @@ def verify_pairs(cand: DataFrame, signatures: DataFrame,
     ``handles``: internal persisted DataFrames are appended here so the
     caller can unpersist them once the verified table is materialized.
 
+    The deep residue is verified by one plan: content joined onto the pair
+    rows, repartitioned by ``a`` and fed to the deep mapper (module
+    docstring). ``formulation`` names that plan and accepts only
+    "joined".
+
     ``eager_meta=False`` skips the pair-metadata agg barrier (one
     sequential driver action per call — barrier-attributed at 5-8 s per
-    occurrence on the 200k bench corpus, r5): the meta persist then
-    fills lazily on first consumption, and because the output plan
-    references meta twice the fill can race cold and compute the meta
-    plan twice. Only for SMALL calls (rep pairs, the escalation wave —
-    both bounded by the salting caps) where double-computing meta is
-    cheaper than a barrier; the residue count is then unknown, so
-    ``formulation`` must name the deep plan explicitly ("joined" for
-    those bounded calls — AQE still shuffle-joins if the residue
-    surprises upward).
+    occurrence on the 200k bench corpus): the meta persist then fills
+    lazily on first consumption, and because the output plan references
+    meta twice the fill can race cold and compute the meta plan twice.
+    Only for SMALL calls (rep pairs, the escalation wave — both bounded by
+    the salting caps) where double-computing meta is cheaper than a
+    barrier; with no residue count the deep stage runs at
+    ``shuffle_partitions`` tasks.
 
     ``deep_budget`` (0 = off): cap the DEEP residue to the top-N pairs by
     est DESCENDING (deterministic a,b tiebreak) — best-evidence-first.
     Used by the escalation wave only (see DedupConfig.escalate_deep_budget
-    for the round-5 1M measurement behind it); budget-dropped pairs keep
-    their sketch verdicts (fast-pass/fail) and simply skip deep, exactly
-    like pairs below the est gates. Accounted in pipeline metrics via
+    for the 1M measurement behind it); budget-dropped pairs keep their
+    sketch verdicts (fast-pass/fail) and simply skip deep, exactly like
+    pairs below the est gates. Accounted in pipeline metrics via
     count_deep_gated (n_esc_deep_dropped) — never a silent cap.
     """
-    if not eager_meta and formulation == "auto":
-        raise ValueError("eager_meta=False requires an explicit "
-                         "formulation (no residue count to adapt on)")
+    if formulation != "joined":
+        raise ValueError(f"unknown deep-verify formulation {formulation!r}; "
+                         "only 'joined' exists")
     meta = _pair_meta(cand, signatures, cfg).persist()
 
     # deep residue: hamming failed, est below the near-certain accept, AND
     # est clears a gate; the LCS-only band (est in [lcs_gate, exact_gate))
     # additionally needs the length floor (LCS <= min normalized length,
     # computed exactly in the signature stage)
-    fast_pass, deep_gate = _gate_exprs(cfg)
+    _, deep_gate = _gate_exprs(cfg)
 
     # ONE action fills the (three-consumer) metadata cache AND measures the
-    # residue for the adaptive formulation choice — a separate need.count()
-    # would be a wasted sequential barrier
+    # residue that sizes the deep stage — a separate need.count() would be
+    # a wasted sequential barrier. Bounded calls (eager_meta=False: rep
+    # pairs, escalation) have no residue count and keep the plain width.
+    p_deep = cfg.shuffle_partitions
     if eager_meta:
         with barrier("v_meta_agg"):
-            # the two HLL sketches ride the SAME hash agg / shuffle as the
-            # counts — the fanout input costs no extra barrier
             row = meta.agg(
                 F.count("*").alias("n"),
-                F.sum(deep_gate.cast("long")).alias("d"),
-                F.approx_count_distinct(
-                    F.when(deep_gate, F.col("a"))).alias("da"),
-                F.approx_count_distinct(
-                    F.when(deep_gate, F.col("b"))).alias("db")).first()
+                F.sum(deep_gate.cast("long")).alias("d")).first()
         n_deep = row["d"] or 0
-        # da+db double-counts ids present on both sides, OVERestimating
-        # participants and so UNDERestimating fanout — the error biases
-        # toward joined, the measured-safe default
-        n_participants = (row["da"] or 0) + (row["db"] or 0)
         instrument.note("n_pairs", row["n"])
         instrument.note("n_deep", n_deep)
-        instrument.note("n_deep_participants", n_participants)
-    else:
-        n_deep = 0      # unused: formulation is forced by the caller
-        n_participants = 0
+        # Wave-1 deep stages run finer than the rest of the plan (the
+        # coarse straggler tail measured 20% of stage wall at 1M/local[8])
+        # but never wider than the residue can fill: a 48-pair residue
+        # runs as ONE task instead of 256 near-empty Python tasks, while
+        # the 1M corpus's 5.8M-pair residue still hits the factor cap.
+        p_deep = max(1, min(p_deep * DEEP_PARTITION_FACTOR,
+                            -(-n_deep // DEEP_PAIRS_PER_TASK)))
     if handles is not None:
         handles.append(meta)
     need = meta.where(deep_gate).select("a", "b", "est")
@@ -497,73 +365,17 @@ def verify_pairs(cand: DataFrame, signatures: DataFrame,
 
     deep_schema = ("a long, b long, jaccard double, lcs_len long, "
                    "deep_pass boolean")
-    # Wave-1 deep stages get FINER partitioning than the rest of the plan
-    # (cfg.deep_partition_factor docstring: the deep mapper's per-task cost
-    # is long and skew-varied, so at shuffle_partitions tasks the stage
-    # drains with a slot-idling straggler tail — measured 20% of stage wall
-    # at 1M/local[8]) — but never more tasks than the residue can fill
-    # (round 6, scale-adaptive per guide §2.2): the measured residue count
-    # caps the width at ~deep_pairs_per_task pairs per task, so a 48-pair
-    # bench residue runs as ONE task instead of 256 near-empty Python
-    # tasks (~200 ms Arrow/worker setup each, event-log measured), while
-    # the 1M-corpus 5.8M-pair residue still hits the factor*partitions
-    # cap and keeps the r5 straggler-packing behavior. Bounded
-    # forced-joined calls (eager_meta=False: rep pairs, escalation) keep
-    # the plain width — no residue count exists there.
-    if eager_meta:
-        cap = cfg.shuffle_partitions * max(1, cfg.deep_partition_factor)
-        p_deep = max(1, min(cap, -(-n_deep // cfg.deep_pairs_per_task)))
-    else:
-        p_deep = cfg.shuffle_partitions
-    use_joined = (formulation == "joined"
-                  or (formulation == "auto"
-                      and choose_joined(n_deep, n_participants, cfg)))
-    if use_joined:
-        # JOINED formulation (module docstring): the pair list is small
-        # enough that AQE broadcasts it — uniq content streams past the
-        # build side without shuffling, and the only content movement is
-        # the explicit repartition that spreads the CPU-heavy residue
-        # across cores (keyed by `a` so the worker memo hits)
-        c_a = uniq.select(F.col("file_id").alias("a"),
-                          F.col("content").alias("content_a"))
-        c_b = uniq.select(F.col("file_id").alias("b"),
-                          F.col("content").alias("content_b"))
-        deep = (need.join(c_a, on="a").join(c_b, on="b")
-                .repartition(p_deep, "a")
-                .mapInPandas(_deep_mapper_joined(cfg), schema=deep_schema))
-    else:
-        # CO-SHUFFLED formulation (module docstring): bucket by
-        # pmod(xxhash64(a), D). The bucket DOMAIN is 8x the partition
-        # count: repartition hashes bucket values into partitions, and
-        # with only P distinct values ~1/e of the partitions would stay
-        # empty (occupancy of P balls in P bins) — 8P values give every
-        # partition ~8 buckets and an even load, while the per-bucket
-        # content table the mapper holds stays 8x smaller.
-        P = p_deep
-        D = 8 * P
-
-        def pid_of(c):
-            return F.pmod(F.xxhash64(c), F.lit(D)).cast("int")
-
-        pair_rows = need.select(
-            pid_of(F.col("a")).alias("pid"), F.lit(1).alias("tag"),
-            "a", "b", "est", F.lit(None).cast("string").alias("content"))
-        participants = (need.select(pid_of(F.col("a")).alias("pid"),
-                                    F.col("a").alias("fid"))
-                        .union(need.select(pid_of(F.col("a")).alias("pid"),
-                                           F.col("b").alias("fid")))
-                        .distinct())
-        content_rows = (participants
-                        .join(uniq.select(F.col("file_id").alias("fid"),
-                                          "content"), on="fid")
-                        .select("pid", F.lit(0).alias("tag"),
-                                F.col("fid").alias("a"),
-                                F.lit(0).cast("long").alias("b"),
-                                F.lit(0.0).alias("est"), "content"))
-        deep = (content_rows.unionByName(pair_rows)
-                .repartition(P, "pid")
-                .sortWithinPartitions("pid", "tag")
-                .mapInPandas(_deep_mapper(cfg), schema=deep_schema))
+    # when the pair list is broadcast-sized AQE broadcasts it and uniq
+    # content streams past the build side without shuffling; the only
+    # content movement is the repartition that spreads the CPU-heavy
+    # residue across cores (keyed by `a` so the worker memo hits)
+    c_a = uniq.select(F.col("file_id").alias("a"),
+                      F.col("content").alias("content_a"))
+    c_b = uniq.select(F.col("file_id").alias("b"),
+                      F.col("content").alias("content_b"))
+    deep = (need.join(c_a, on="a").join(c_b, on="b")
+            .repartition(p_deep, "a")
+            .mapInPandas(_deep_mapper_joined(cfg), schema=deep_schema))
 
     return (meta.join(deep, on=["a", "b"], how="left")
             .withColumn("jaccard", F.coalesce("jaccard", F.lit(-1.0)))

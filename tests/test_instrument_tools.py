@@ -14,14 +14,10 @@ import parse_eventlog  # noqa: E402
 
 def test_execution_knobs_do_not_change_config_hash():
     """Every execution-only knob must leave config_hash alone — a resume
-    after tuning one must NOT recompute completed stages (and
-    deep_partition_factor, unlike incremental_buckets, changes no
-    persisted layout either, so exclusion is safe — ADVICE r4 #1)."""
+    after tuning one must NOT recompute completed stages."""
     base = DedupConfig().config_hash()
-    assert DedupConfig(deep_partition_factor=16).config_hash() == base
     assert DedupConfig(shuffle_partitions=4).config_hash() == base
     assert DedupConfig(arrow_batch_rows=7).config_hash() == base
-    assert DedupConfig(deep_coshuffle_pairs=1).config_hash() == base
     # and a semantic knob MUST change it
     assert DedupConfig(tau_hamming=5).config_hash() != base
 

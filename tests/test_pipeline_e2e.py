@@ -6,6 +6,7 @@
   truth >= 0.99, precision guard on the `license` negative class.
 - aggressive salting (bucket_cap=2): oracle parity must survive skew breaking.
 - permutation invariance: repartitioned input -> identical clusters.
+- join regime x partition count: identical verified pairs and clusters.
 """
 
 from __future__ import annotations
@@ -65,48 +66,41 @@ def test_tiny_salted_parity(spark):
     assert pp <= op
 
 
-def test_deep_formulations_identical(spark):
-    """Round 4: the adaptive deep-verify switch must be invisible in the
-    output — force the co-shuffle formulation (threshold 0) and compare
-    against the joined formulation (threshold huge) pair for pair."""
-    cfg_join = DedupConfig(shuffle_partitions=8,
-                           deep_coshuffle_pairs=10**12)
-    cfg_cosh = DedupConfig(shuffle_partitions=8, deep_coshuffle_pairs=0,
-                           deep_coshuffle_fanout=0.0)
+def test_join_regime_and_partition_independence(spark):
+    """The verified pairs and the clusters must not depend on the join
+    regime (AQE broadcast vs broadcast disabled, which forces the deep
+    content joins to shuffle) or on the partition count — all four runs
+    identical and equal to the oracle partition."""
     rows = C.generate("tiny", seed=42)
     df = spark.createDataFrame(C.to_pandas(rows))
-    outs = []
-    for cfg in (cfg_join, cfg_cosh):
-        res = run_pipeline(spark, df, cfg, collect_metrics=False)
-        outs.append({
-            "clusters": {(r["repo"], r["path"], r["commit"]): r["cluster_id"]
-                         for r in res.clusters.collect()},
-            "verified": sorted(map(tuple, res.verified_pairs.collect()))})
-        res.release()
-    assert outs[0]["verified"] == outs[1]["verified"]
-    assert outs[0]["clusters"] == outs[1]["clusters"]
-
-
-def test_choose_joined_fanout_switch():
-    """Round 5 (VERDICT r4 next #3): co-shuffle requires BOTH an
-    over-floor (unbroadcastable) residue AND a high content-duplication
-    fanout. The thresholds must keep picking the calibrated sides: joined
-    at the round-4 616k-pair broadcastable point (measured 10-20% faster),
-    co-shuffle at the round-5 5.8M-pair/719k-participant point — fanout
-    16.2, the measured local crossover, where a real cluster's network
-    shuffle tips the choice to co-shuffle (verify.choose_joined)."""
-    from nise_dedup.verify import choose_joined
-    cfg = DedupConfig()
-    # the round-4 measured point: 616k pairs, broadcast-sized -> joined
-    assert choose_joined(616_128, 150_000, cfg)
-    # the round-5 measured point: over-floor AND fanout 16.2 -> co-shuffle
-    assert not choose_joined(5_822_439, 719_010, cfg)
-    # over-floor but dup-sparse (fanout 5): joined keeps the non-blocking
-    # plan — its byte duplication is near the once-per-participant floor
-    assert choose_joined(10_000_000, 4_000_000, cfg)
-    # forcing knobs used by tests/the A/B script still force
-    forced = DedupConfig(deep_coshuffle_pairs=0, deep_coshuffle_fanout=0.0)
-    assert not choose_joined(1, 1, forced)
+    want = O.run_oracle([r.__dict__ for r in rows], DedupConfig(),
+                        fast_signatures=True)
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    outs = {}
+    try:
+        for threshold in (saved[keys[0]], "-1"):
+            for parts in (1, 7):
+                spark.conf.set(keys[0], threshold)
+                spark.conf.set(keys[1], str(parts))
+                res = run_pipeline(spark, df,
+                                   DedupConfig(shuffle_partitions=parts),
+                                   collect_metrics=False)
+                outs[(threshold, parts)] = (
+                    sorted(map(tuple, res.verified_pairs.collect())),
+                    {(r["repo"], r["path"], r["commit"]): r["cluster_id"]
+                     for r in res.clusters.collect()})
+                res.release()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    first_verified, first_clusters = next(iter(outs.values()))
+    assert first_verified
+    for verified, clusters in outs.values():
+        assert verified == first_verified
+        assert clusters == first_clusters
+    assert _partitions(first_clusters) == _partitions(want.clusters)
 
 
 def test_tiny_permutation_invariance(spark):
