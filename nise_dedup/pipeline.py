@@ -28,7 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nise_dedup import cc, ingest, lsh, verify
+from nise_dedup import cc, ingest, instrument, lsh, verify
 from nise_dedup.instrument import barrier
 from nise_dedup.config import DedupConfig
 from nise_dedup.io import (read_stage, run_stage, run_stage_buckets,
@@ -352,7 +352,7 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
         cross-salt member pairs re-verified through the SAME cascade —
         without it a true dup split across salts of a heterogeneous
         capped bucket stays silently disconnected. Returns None when
-        escalation is off or provably irrelevant (nothing salted).
+        escalation is off, nothing salted, or no rep pair failed.
 
         The failed-salt-pair decision needs rep-pair verdicts ONLY, so it
         is fed a SEPARATELY-verified rep-pair table (tiny: <= rep_k^2
@@ -364,10 +364,13 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
         local[8] 200k run (82s of 170s at local[2]). With the decision
         decoupled, wave 1 is referenced exactly once (the published
         union) and the whole verify DAG stays lazy until CC's one
-        materializing action; the only added barriers are the rep
-        table's own (small) meta agg + count. The escalated pair list is
-        returned LAZY — its (metrics-only) count is taken in the metrics
-        section, not on the hot path."""
+        materializing action; the only added barrier is the rep table's
+        fill, an agg that also counts the failed rep pairs. Every
+        cross-salt rep pair is a row of that table, so when none failed
+        no salt pair can lose all of its rep_k^2 chances and the wave is
+        provably empty — its plan is then never built. Otherwise the
+        escalated pair list is returned LAZY — its (metrics-only) count
+        is taken in the metrics section, not on the hot path."""
         if not cfg.escalate_failed_rep_pairs:
             return None
         # the free salted-row signal: 0 rows in salted sub-buckets means no
@@ -391,7 +394,13 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             handles=verify_internals, eager_meta=False).persist()
         stage_caches.append(rep_verd)
         with barrier("p_rep_verify"):
-            rep_verd.count()
+            n_failed = rep_verd.agg(
+                F.sum((~F.col("passed")).cast("long"))).first()[0] or 0
+        instrument.note("n_rep_failed", n_failed)
+        if n_failed == 0:
+            rep_verd.unpersist()    # nothing else reads it
+            stage_caches.remove(rep_verd)
+            return None
         # metrics-mode diag reads these (tiny, hot) rather than re-running
         # the full wave-1 cascade through the published verified frame
         esc_holder["salted"] = salted
@@ -401,9 +410,9 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
 
     def _verified():
         """Wave 1 (the frozen cascade over every LSH candidate) + wave 2
-        (see _wave2_pairs) in one frame. Wave 2 may be EMPTY (all rep
-        pairs passed) — verifying an empty pair list is a no-op plan, so
-        no count barrier decides this on the hot path.
+        (see _wave2_pairs) in one frame. Wave 2 is built only when the
+        rep-verify action counted a failed rep pair; it may still be
+        empty (the failed salt pairs were all oversize or over budget).
 
         The rep-verify chain and wave 1's meta agg are INDEPENDENT given
         the salted/signature/uniq caches (all hot by now), so they run
@@ -521,6 +530,13 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             "n_escalation_pairs": (esc_holder["df"].count()
                                    if "df" in esc_holder else 0),
         })
+        # no wave-2 plan (nothing salted, no failed rep pair, or a
+        # resumed verified stage): every escalation key reads 0, never
+        # missing, so "zero" and "not measured" cannot be confused
+        esc_keys = ("n_failed_salt_pairs", "n_skipped_oversize",
+                    "n_skipped_budget", "n_budgeted_pairs")
+        metrics.update(dict.fromkeys(
+            esc_keys + ("n_esc_deep_gated", "n_esc_deep_dropped"), 0))
         if "df" in esc_holder:
             # no-silent-caps: both escalation bounds (per-bucket oversize
             # + the run-level escalate_max_pairs budget) surface here —
@@ -529,9 +545,7 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             # by re-running the wave-1 cascade
             drow = lsh.escalation_diag(
                 esc_holder["salted"], esc_holder["rep_verd"], cfg).first()
-            metrics.update({k: drow[k] or 0 for k in
-                            ("n_failed_salt_pairs", "n_skipped_oversize",
-                             "n_skipped_budget", "n_budgeted_pairs")})
+            metrics.update({k: drow[k] or 0 for k in esc_keys})
             # deep-budget accounting (escalate_deep_budget docstring):
             # how many wave-2 pairs the cascade WOULD deep-verify vs the
             # est-descending budget actually spent

@@ -256,7 +256,10 @@ def test_escalation_budget_spent_cost_ascending(spark):
 
 def test_escalation_quiet_when_reps_pass(spark):
     """One passing rep pair per salt pair means NO escalation wave —
-    the common case must stay free."""
+    the common case must stay free. At pipeline level it is free too:
+    when the rep-verify action counts no failed rep pair, run_pipeline
+    never builds the wave's plan (see
+    test_pipeline_e2e::test_escalation_gate_equivalence)."""
     from nise_dedup.lsh import escalation_pairs, failed_salt_pairs, \
         salted_buckets
 

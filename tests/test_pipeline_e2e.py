@@ -7,10 +7,13 @@
 - aggressive salting (bucket_cap=2): oracle parity must survive skew breaking.
 - permutation invariance: repartitioned input -> identical clusters.
 - join regime x partition count: identical verified pairs and clusters.
+- escalation gate: skipping the wave when no rep pair failed changes no
+  verified pair.
 """
 
 from __future__ import annotations
 
+import random
 from collections import defaultdict
 
 import pytest
@@ -101,6 +104,104 @@ def test_join_regime_and_partition_independence(spark):
         assert verified == first_verified
         assert clusters == first_clusters
     assert _partitions(first_clusters) == _partitions(want.clusters)
+
+
+def _stub_copies(n=12):
+    """n ~600-byte stubs differing in one number: one hot bucket whose
+    cross-salt rep pairs all pass verification."""
+    body = "".join(f"    value_{i} = compute(item, {i}) + offset\n"
+                   for i in range(14))
+    return [C.CorpusRow(f"stub{k}", "h.py", "c0", "py",
+                        f"def handler(item):\n    limit = {1000 + k}\n"
+                        + body + "    return value_0\n", 0, "edit")
+            for k in range(n)]
+
+
+def _shared_header_family(n=40, n_dups=6, seed=7):
+    """n files sharing a ~300-byte header with distinct ~100-byte bodies
+    (LSH collides them, verification rejects them: exact J < tau_jaccard
+    and the shared run is under tau_lcs_min_bytes), plus n_dups one-byte
+    edits of the first files. Salted buckets of mutually dissimilar files
+    make rep pairs fail, so the escalation wave is built and non-empty."""
+    rng = random.Random(seed)
+    words = ("alpha beta gamma delta epsilon zeta theta kappa lambda sigma "
+             "node edge graph hash table index batch stream buffer queue "
+             "stack heap tree merge split scan probe emit flush chunk").split()
+    header = "".join("# " + " ".join(rng.choice(words) for _ in range(5))
+                     + "\n" for _ in range(10))
+    rows = [C.CorpusRow(f"fam{k}", "f.py", "c0", "py",
+                        header + " ".join(rng.choice(words)
+                                          for _ in range(14)) + "\n",
+                        -1, "license")
+            for k in range(n)]
+    rows += [C.CorpusRow(f"dup{k}", "f.py", "c0", "py",
+                         rows[k].content[:-1] + "!\n", k, "edit")
+             for k in range(n_dups)]
+    return rows
+
+
+@pytest.mark.parametrize("case", ["reps_pass", "reps_fail"])
+def test_escalation_gate_equivalence(spark, case):
+    """The pipeline builds the escalation wave only when the rep-verify
+    action counts a failed rep pair. Both branches must publish exactly
+    the verified pairs of the ungated composition (wave 1 over the
+    candidates + wave 2 over escalation_pairs minus the candidates), and
+    the metrics must carry every escalation key either way."""
+    from nise_dedup import instrument, lsh
+    from nise_dedup.verify import verify_pairs
+
+    if case == "reps_pass":
+        rows, cfg = _stub_copies(), DedupConfig(shuffle_partitions=8,
+                                                 bucket_cap=4)
+    else:
+        rows, cfg = _shared_header_family(), DedupConfig(
+            shuffle_partitions=8, bucket_cap=3)
+    df = spark.createDataFrame(C.to_pandas(rows))
+    instrument.enable()
+    try:
+        res = run_pipeline(spark, df, cfg)
+    finally:
+        log = instrument.disable()
+    notes = [b["value"] for b in log if b["name"] == "n_rep_failed"]
+    assert len(notes) == 1
+    m = res.metrics
+    for k in ("n_failed_salt_pairs", "n_skipped_oversize",
+              "n_skipped_budget", "n_budgeted_pairs", "n_esc_deep_gated",
+              "n_esc_deep_dropped", "n_escalation_pairs"):
+        assert k in m, k
+    if case == "reps_pass":
+        assert notes[0] == 0
+        assert m["n_rep_pairs"] > 0 and m["n_rep_pairs_failed"] == 0
+        assert m["n_escalation_pairs"] == m["n_failed_salt_pairs"] == 0
+    else:
+        assert notes[0] > 0
+        assert m["n_failed_salt_pairs"] > 0
+        assert m["n_escalation_pairs"] > 0        # the wave is non-empty
+
+    sigs, uniq, cand = (res.stages[k] for k in
+                        ("signatures", "uniq", "cand_pairs"))
+    handles: list = []
+    salted = lsh.salted_buckets(lsh.explode_bands(sigs), cfg)
+    rep = verify_pairs(lsh.cross_rep_pairs(salted, cfg.rep_k), sigs, uniq,
+                       cfg, handles=handles, eager_meta=False)
+    esc = (lsh.escalation_pairs(salted, rep, cfg)
+           .join(cand.select("a", "b"), on=["a", "b"], how="left_anti"))
+    wave1 = verify_pairs(cand, sigs, uniq, cfg, handles=handles)
+    ungated = wave1.unionByName(verify_pairs(
+        esc, sigs, uniq, cfg, handles=handles, eager_meta=False,
+        deep_budget=cfg.escalate_deep_budget))
+    assert (sorted(map(tuple, res.verified_pairs.collect()))
+            == sorted(map(tuple, ungated.collect())))
+    for h in handles:
+        h.unpersist()
+
+    pred = {(r["repo"], r["path"], r["commit"]): r["cluster_id"]
+            for r in res.clusters.collect()}
+    want = O.run_oracle([r.__dict__ for r in rows], cfg,
+                        fast_signatures=True)
+    assert _partitions(pred) == _partitions(want.clusters)
+    assert_sha_invariant(df, res.clusters)
+    res.release()
 
 
 def test_tiny_permutation_invariance(spark):
